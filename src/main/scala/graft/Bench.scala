@@ -133,11 +133,17 @@ object Bench {
     } catch { case _: Throwable => } // best effort — never fail the bench
   }
 
-  def main(args: Array[String]): Unit = {
-    installCodegenFailCounter()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val poolSize = sys.env.getOrElse("SPARK_GRAFT_POOL", "8").toInt
+  /** Host cores the session runs on: `SPARK_GRAFT_CPUS`, else every core
+    * the JVM sees. Also the session's shuffle-partition count.
+    */
+  private lazy val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The one session profile. Bench, Verify, ScaleStress and Probe all
+    * run on it, so every plan a tool prints or a gate checks is a plan
+    * the bench times.
+    */
+  def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
@@ -167,6 +173,13 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.prep(spark)
+  }
+
+  def main(args: Array[String]): Unit = {
+    installCodegenFailCounter()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val poolSize = sys.env.getOrElse("SPARK_GRAFT_POOL", "8").toInt
+    val spark = session()
 
     // Host 1-minute load average at start and end of the run: the
     // shared-host noise signature (documented in BASELINE.md) shows up

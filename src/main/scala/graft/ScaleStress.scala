@@ -264,17 +264,44 @@ object ScaleStress {
     println(f"CHECK $name%-28s ${if (ok) "PASS" else "FAIL"} $secs%8.1f s$err")
   }
 
+  /** Runs `body` at `n` shuffle partitions, then restores the session's
+    * previous setting (the profile's core count, not a fixed number).
+    */
+  private def withPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, n.toString)
+    try body finally s.conf.set(key, prev)
+  }
+
   /** Build a registered query under a given shuffle-partition setting
     * with ALL memoized artifacts dropped first, so the leg re-runs the
     * artifact builds (range sampling included) under that partitioning.
     */
   private def legFp(s: SparkSession, dir: String, q: String, parts: Int):
-      (Long, java.math.BigDecimal) = {
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      (Long, java.math.BigDecimal) = withPartitions(s, parts) {
     Caches.clear(s)
-    try fingerprint(SparkEntry.queries(q)(s, dir))
-    finally s.conf.set("spark.sql.shuffle.partitions", "32")
+    fingerprint(SparkEntry.queries(q)(s, dir))
   }
+
+  /** Fresh-cache wall cost of one scale100 leg: MIN of two runs (the
+    * first run pays cold page-cache reads of a 10×-bigger corpus — I/O
+    * warmup, not compute, and it inflated ratios ~3× before the min).
+    * Shuffle partitions scale with the corpus (32 at 10×, 128 at 100×),
+    * the knob a real cluster (or AQE) turns with data volume — fixed 32
+    * spills the 100× substring aggregation. The clock starts before
+    * construction, so driver-side memo actions on cold caches count.
+    */
+  def timedLeg(s: SparkSession, d: String, q: String, parts: Int): Double =
+    withPartitions(s, parts) {
+      def once(): Double = {
+        Caches.clear(s)
+        val t0 = System.nanoTime()
+        SparkEntry.queries(q)(s, d).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      math.min(once(), once())
+    }
 
   // ---- parameterized planted-truth bodies — ONE spelling shared by
   // the 10× and 100× phases, so the scales cannot drift ----
@@ -361,18 +388,7 @@ object ScaleStress {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // same runtime SMJ→shuffled-hash conversion as the bench session
-      // (Bench.scala) — the gate must measure the plans the bench runs
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.prep(spark)
+    val spark = Bench.session()
 
     val t0 = System.nanoTime()
     generate(spark, dir)
@@ -693,85 +709,72 @@ object ScaleStress {
       val chain = Seq("q_dedup_substring", "q_dedup_substring_append",
         "q_dedup_jaccard", "q_dedup_index_append", "q_dedup_embed_hybrid",
         "q_stream_neardup_gate", "q_stream_decontaminate")
-      // Per-leg cost = MIN of two fresh-cache runs (the first run pays
-      // cold page-cache reads of a 10×-bigger corpus — I/O warmup, not
-      // compute, and it inflated ratios ~3× before the min); shuffle
-      // partitions scale with the corpus (32 → 128), the knob a real
-      // cluster (or AQE, which the bench config enables) turns with
-      // data volume — fixed 32 spills the 100× substring aggregation.
-      def timedLeg(d: String, q: String, parts: Int): Double = {
-        def once(): Double = {
-          spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-          Caches.clear(spark)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(q)(spark, d).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        try math.min(once(), once())
-        finally spark.conf.set("spark.sql.shuffle.partitions", "32")
-      }
       chain.foreach { q =>
         // both legs INSIDE the check (ADVICE r12): an exception while
         // timing the 10× leg is recorded as this check's failure
         // instead of aborting the whole gate run uncaught.
         check(s"scale100_cost_$q") {
-          val t10 = timedLeg(dir, q, 32)
-          val t100 = timedLeg(dir100, q, 128)
+          val t10 = timedLeg(spark, dir, q, 32)
+          val t100 = timedLeg(spark, dir100, q, 128)
           val ratio = t100 / t10
           legTimes(q) = (t10, t100)
           println(f"  LEG $q t10=$t10%.1f s t100=$t100%.1f s ratio=$ratio%.1f")
           ratio <= 12.0
         }
       }
-      // planted truth at 100× (caches warm from the timed legs)
-      check("scale100_planted_exact") {
-        plantedExactOk(spark, dir100, 4000)
-      }
-      check("scale100_planted_jaccard") {
-        plantedJaccardOk(spark, dir100, Doc100, 4000)
-      }
-      check("scale100_planted_minhash_recall") {
-        plantedMinhashRecallOk(spark, dir100, Doc100, 4000)
-      }
-      check("scale100_planted_substring_rewrite") {
-        plantedRewriteOk(spark, dir100, 4000)
-      }
-      check("scale100_planted_embed") {
-        plantedEmbedOk(spark, dir100, Emb100, 2000)
-      }
-      check("scale100_substring_append_vs_rebuild") {
-        substringAppendOk(spark, dir100, 4000)
-      }
-      // the two streaming ingest gates vs their batch twins at 100×
-      check("scale100_stream_neardup_vs_batch") {
-        import graft.queries.{Fingerprints => F}
-        val docs = Tables.documents(spark, dir100)
-        val standing = F.bandTableOf(spark,
-          docs.filter(col("doc_id") % 10 =!= 7).select("doc_id", "text"))
-        val arriving = F.bandTableOf(spark,
-          docs.filter(col("doc_id") % 10 === 7).select("doc_id", "text"))
-        val batchTwin = arriving.join(
-            standing.select(col("band"), col("v1"), col("v2"),
-              col("doc_id").as("standing_doc")),
-            Seq("band", "v1", "v2"))
-          .select("doc_id", "band", "standing_doc").distinct()
-        val b = fingerprint(batchTwin)
-        val st = fingerprint(
-          SparkEntry.queries("q_stream_neardup_gate")(spark, dir100))
-        b._1 > 0 && b == st
-      }
-      check("scale100_stream_decontam_vs_batch") {
-        val st = fingerprint(
-          SparkEntry.queries("q_stream_decontaminate")(spark, dir100))
-        val b = fingerprint(SparkEntry.queries("q_decontaminate")(spark, dir100))
-        // liveness: the gate must DROP something at 100× (an inert gate
-        // passes any equality — the round-10 lesson; the planted
-        // eval-leak rule, id ≡ 11 mod 101 copying docs 0–19, is what
-        // makes this live on the synthetic corpus)
-        val total = Tables.documents(spark, dir100)
-          .filter(col("doc_id") >= 20).count()
-        println(s"  decontam kept ${st._1} / $total arriving docs (batch ${b._1})")
-        st._1 > 0 && st._1 < total && st == b
+      // planted truth at 100× (caches warm from the timed legs), at the
+      // legs' 128 partitions: at the profile's partitions = cores, each
+      // reduce task sorts a 1/cores share of the 100× positional hashes
+      withPartitions(spark, 128) {
+        check("scale100_planted_exact") {
+          plantedExactOk(spark, dir100, 4000)
+        }
+        check("scale100_planted_jaccard") {
+          plantedJaccardOk(spark, dir100, Doc100, 4000)
+        }
+        check("scale100_planted_minhash_recall") {
+          plantedMinhashRecallOk(spark, dir100, Doc100, 4000)
+        }
+        check("scale100_planted_substring_rewrite") {
+          plantedRewriteOk(spark, dir100, 4000)
+        }
+        check("scale100_planted_embed") {
+          plantedEmbedOk(spark, dir100, Emb100, 2000)
+        }
+        check("scale100_substring_append_vs_rebuild") {
+          substringAppendOk(spark, dir100, 4000)
+        }
+        // the two streaming ingest gates vs their batch twins at 100×
+        check("scale100_stream_neardup_vs_batch") {
+          import graft.queries.{Fingerprints => F}
+          val docs = Tables.documents(spark, dir100)
+          val standing = F.bandTableOf(spark,
+            docs.filter(col("doc_id") % 10 =!= 7).select("doc_id", "text"))
+          val arriving = F.bandTableOf(spark,
+            docs.filter(col("doc_id") % 10 === 7).select("doc_id", "text"))
+          val batchTwin = arriving.join(
+              standing.select(col("band"), col("v1"), col("v2"),
+                col("doc_id").as("standing_doc")),
+              Seq("band", "v1", "v2"))
+            .select("doc_id", "band", "standing_doc").distinct()
+          val b = fingerprint(batchTwin)
+          val st = fingerprint(
+            SparkEntry.queries("q_stream_neardup_gate")(spark, dir100))
+          b._1 > 0 && b == st
+        }
+        check("scale100_stream_decontam_vs_batch") {
+          val st = fingerprint(
+            SparkEntry.queries("q_stream_decontaminate")(spark, dir100))
+          val b = fingerprint(SparkEntry.queries("q_decontaminate")(spark, dir100))
+          // liveness: the gate must DROP something at 100× (an inert gate
+          // passes any equality — the round-10 lesson; the planted
+          // eval-leak rule, id ≡ 11 mod 101 copying docs 0–19, is what
+          // makes this live on the synthetic corpus)
+          val total = Tables.documents(spark, dir100)
+            .filter(col("doc_id") >= 20).count()
+          println(s"  decontam kept ${st._1} / $total arriving docs (batch ${b._1})")
+          st._1 > 0 && st._1 < total && st == b
+        }
       }
       Caches.clear(spark)
     }
